@@ -524,3 +524,108 @@ def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
     # the owning pipeline recovers (and clears) its own record
     assert sib.recover() == ["swap"]
     assert not os.path.exists(sibling_intent)
+
+
+# -- per-operation job budget and checkpoint lifetime -------------------------
+
+
+def _group_jobs(spark, group):
+    """(name, description) of every job run under job group ``group``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        j = store.job(jid)
+        desc = j.description()
+        out.append((j.name(), desc.get() if desc.isDefined() else ""))
+    return out
+
+
+def _listing_jobs(jobs):
+    # HadoopFSUtils' parallel file listing: a `parquet at ...` job that
+    # lists the read's directories on executors before the scan plans
+    return [j for j in jobs if j[1].startswith("Listing leaf files")]
+
+
+def test_etl_ops_list_the_index_on_the_driver(spark, tmp_path, monkeypatch):
+    """On a 64-bucket index, an upsert, a delete and an incremental
+    process_folder run no parallel listing job, and force=False hands the
+    converter only the new file."""
+    from pyspark.sql import Observation
+
+    from data_etl_spark.operators import convert
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(150):
+        (src / f"doc_{i:03d}.txt").write_text(f"body{i} " * 30)
+    pipe = ETLPipeline(
+        spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=64)
+    )
+    pipe.process_folder(str(src))
+    n_dirs = sum(p.name.startswith("bucket=") for p in (tmp_path / "index").iterdir())
+    assert n_dirs > 32, "fixture must exceed Spark's default listing threshold"
+
+    sc = spark.sparkContext
+    upd = spark.createDataFrame([("doc_001.txt", "fresh text " * 40)], "filename string, text string")
+    # the incremental run's folder: doc_002 deleted, one new file
+    (src / "doc_002.txt").unlink()
+    (src / "doc_new.txt").write_text("brand new " * 30)
+    real = convert.to_markdown
+    seen = Observation("converter_input")
+    monkeypatch.setattr(
+        convert,
+        "to_markdown",
+        lambda df, *a, **kw: real(df.observe(seen, F.count(F.lit(1)).alias("rows")), *a, **kw),
+    )
+    ops = {
+        "upsert": lambda: pipe.ingest(upd),
+        "delete": lambda: pipe.delete_documents(["doc_002.txt"]),
+        "incremental": lambda: pipe.process_folder(str(src), force=False),
+    }
+    try:
+        for name, op in ops.items():
+            sc.setJobGroup(f"etl_budget_{name}", name)
+            op()
+            jobs = _group_jobs(spark, f"etl_budget_{name}")
+            assert jobs, name
+            assert _listing_jobs(jobs) == [], (name, jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen.get["rows"] == 1
+    names = {r.filename for r in pipe.index_table().select("filename").distinct().collect()}
+    assert "doc_new.txt" in names and "doc_002.txt" not in names and len(names) == 150
+
+
+def test_ingest_releases_its_checkpoint(pipe, docs, spark, monkeypatch):
+    """The per-batch checkpoint of an upsert is dropped before ingest
+    returns, also when the staged write raises; the bootstrap write into a
+    missing index takes no checkpoint at all."""
+    import data_etl_spark.etl as etl
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    calls = []
+    real = etl.tracked_local_checkpoint
+    monkeypatch.setattr(
+        etl, "tracked_local_checkpoint", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+    pipe.ingest(docs)
+    assert calls == []
+
+    upd = spark.createDataFrame([("doc_0.pdf", "fresh text " * 50)], "filename string, text string")
+    before = persisted()
+    pipe.ingest(upd)
+    assert calls == [1]
+    assert persisted() == before
+
+    def failing_swap(*a, **kw):
+        raise RuntimeError("staged write failed")
+
+    monkeypatch.setattr(pipe, "_swap_buckets", failing_swap)
+    with pytest.raises(RuntimeError, match="staged write failed"):
+        pipe.ingest(upd)
+    assert calls == [1, 1]
+    assert persisted() == before
